@@ -1,8 +1,9 @@
-"""Native (C, via ctypes) twin of ``kernel._xy_cut`` — the extraction
-kernel's hottest loop.
+"""Native (C, via ctypes) fast forms of the engine's hot loops: the
+whole-batch extraction kernel and its XY-cut, the wire shard parser, and
+the seeded-md5 minhash.
 
-Profiling at 400k bench docs (round 7): ``kernel.extract_document`` costs
-~1.1 ms/doc single-thread, and 57% of it is ``_xy_cut`` — pure integer
+Profiling at 400k bench docs (round 7): a pure-Python batch extraction
+costs ~1.1 ms/doc single-thread, and 57% of it is the XY-cut — pure integer
 geometry (stable sorts + 1-D gap grouping + a band suffix scan) over ~60
 spans/page, dominated by CPython interpreter overhead (14M function calls
 per 3k docs), not by algorithmic work. That shape is exactly what a tiny C
@@ -10,11 +11,14 @@ routine removes: no strings, no objects, fixed int64 arithmetic.
 
 Contract and safety:
 
-* ``xy_cut(x1s, y1s, x2s, y2s)`` returns the same ``[(idx, region_x0)...]``
-  as ``kernel._xy_cut`` BIT-FOR-BIT — same stable-sort tie-breaks (stable
-  merge sort in C mirrors ``sorted(key=...)``), same composite leaf key
+* ``xy_cut(x1s, y1s, x2s, y2s, gap_x, gap_y)`` returns the same
+  ``[(idx, region_x0)...]`` as ``core.xy_cut`` BIT-FOR-BIT — same
+  stable-sort tie-breaks (stable merge sort in C mirrors
+  ``sorted(key=...)``), the (y1, x1, idx) leaf order as one composite key
   (y1*KY + x1*KX + i), same band suffix-scan semantics. Differentially
-  fuzzed against the Python twin in tests/test_kernel.py.
+  fuzzed against ``core.xy_cut`` (the XY-cut cases in tests/test_kernel).
+* ``extract_batch`` equals ``core.extract_document`` per document
+  (tests/test_extract_native.py, test_property.py, test_fuzz.py).
 * The C source is embedded here (ships inside the package zip to
   executors), compiled ON FIRST USE with the system cc into a /tmp cache
   keyed by the source sha256 (atomic rename — concurrent workers race
@@ -32,12 +36,14 @@ import os
 import subprocess
 import tempfile
 
+import pyarrow as pa
+
 _C_SOURCE = r"""
 #define _GNU_SOURCE  /* memmem */
 #include <stdlib.h>
 #include <string.h>
 
-/* Mirrors ch_pdf_parse_spark.kernel._xy_cut exactly (see that docstring).
+/* Mirrors ch_pdf_parse_spark.core.xy_cut exactly (see that docstring).
    All index arrays hold page-local span indices; sorts are STABLE. */
 
 typedef struct {
@@ -73,7 +79,7 @@ static void sort_by(Ctx *c, int *idxs, int n, const long long *vals) {
 }
 
 /* groups over a sorted run: starts[g]..starts[g+1] slices of sorted_idx.
-   identical to kernel._groups_1d */
+   identical to core._groups_1d */
 static int groups_1d(const int *sorted_idx, int n, const long long *lo,
                      const long long *hi, long long min_gap, int *starts) {
     int ng = 0;
@@ -99,7 +105,10 @@ static void emit(Ctx *c, int idx, long long x0) {
     c->out_n++;
 }
 
-/* leaf: sort by composite (y1*KY + x1*KX + i) and emit */
+/* leaf: sort by composite (y1*KY + x1*KX + i) and emit — core.xy_cut's
+   (y1, x1, idx) order. Any int32 offset decodes to y1 <= 999 and
+   x1 <= 9999, so the x1 slot must hold 10000 values (an earlier 1024-wide
+   slot let x1 spill into y1); the idx slot holds 2^24 spans per page. */
 #define KI (1LL << 24)
 #define KX KI
 #define KY (KI * 10000LL)
@@ -554,10 +563,10 @@ decide:
 
 
 /* ------------------------------------------------------------------ */
-/* Whole-batch extraction kernel — C twin of kernel.extract_document  */
+/* Whole-batch extraction kernel — C twin of core.extract_document    */
 /* driven over the Arrow buffers directly (see that module's          */
 /* docstrings for the reference semantics; differentially pinned in   */
-/* tests/test_kernel.py / test_fuzz / test_golden via the dispatch).  */
+/* tests/test_extract_native / test_fuzz / test_golden).              */
 
 typedef struct {            /* one Arrow string column, zero-offset */
     const unsigned char *vals;
@@ -632,7 +641,7 @@ static Bytes BC(const unsigned char *s, long long n) {
     Bytes b; b.p = s; b.n = n; return b;
 }
 
-/* mirror of kernel._classify over UTF-8 bytes */
+/* mirror of core.classify_kind over UTF-8 bytes */
 static Bytes classify(const ExCfg *g, Bytes text, long long page,
                       long long y1) {
     if (beq(text, g->eq, g->eq_len)) return BC(K_EQ, 8);
@@ -1236,7 +1245,8 @@ long long minhash_text(const unsigned char *valid, const int *offs,
                 if (!nscr) { free(starts); free(scratch); return -1; }
                 scratch = nscr;
             }
-            memcpy(scratch + 3, data + sb, (size_t)slen);
+            if (slen)   /* an all-empty column has no data buffer */
+                memcpy(scratch + 3, data + sb, (size_t)slen);
             for (i = 0; i < nh; i++) {
                 unsigned char *m0 = scratch + 3 - plen[i];
                 memcpy(m0, prefix[i], (size_t)plen[i]);
@@ -1305,8 +1315,9 @@ def available() -> bool:
 
 def xy_cut(x1s: list, y1s: list, x2s: list, y2s: list,
            gap_x: int, gap_y: int):
-    """C twin of kernel._xy_cut: [(local_idx, region_x0), ...] or None when
-    the native library is unavailable (caller falls back to Python)."""
+    """C twin of core.xy_cut over parallel lists: [(local_idx, region_x0),
+    ...] or None when the native library is unavailable (caller falls back
+    to core.xy_cut)."""
     lib = _lib()
     if lib is None:
         return None
@@ -1370,6 +1381,12 @@ def _str_array(col, pa, np):
         null_count=nulls)
 
 
+# Arrow type of one span: the input and output struct of the engine (the
+# Arrow form of pipeline.SPAN_STRUCT) and the only layout the C kernel reads.
+SPAN_TYPE = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                       ("media_ref", pa.string()), ("offset", pa.int32())])
+
+
 def parse_shard_batch(data: bytes):
     """(RecordBatch in the documents schema, n_corrupt) via the C parser,
     or None when the native library is unavailable / out of memory —
@@ -1380,7 +1397,6 @@ def parse_shard_batch(data: bytes):
     if lib is None:
         return None
     import numpy as np
-    import pyarrow as pa
 
     pp = lib.parse_shard_c(data, len(data))
     if not pp:
@@ -1414,11 +1430,8 @@ def parse_shard_batch(data: bytes):
     off_arr = pa.Array.from_buffers(
         pa.int32(), ns, [off_mask, pa.py_buffer(offv)],
         null_count=off_nulls)
-    span_struct = pa.struct([("kind", pa.string()), ("text", pa.string()),
-                             ("media_ref", pa.string()),
-                             ("offset", pa.int32())])
     values = pa.StructArray.from_arrays(
-        [kinds, texts, medias, off_arr], fields=list(span_struct))
+        [kinds, texts, medias, off_arr], fields=list(SPAN_TYPE))
     null_counts = counts < 0
     list_offs = np.zeros(n_docs + 1, dtype=np.int32)
     if n_docs:
@@ -1533,7 +1546,6 @@ def minhash_text_batch(text_arr, ngram: int, n_hash: int):
     if lib is None:
         return None
     import numpy as np
-    import pyarrow as pa
 
     if isinstance(text_arr, pa.ChunkedArray):
         text_arr = text_arr.combine_chunks()
@@ -1555,33 +1567,50 @@ def minhash_text_batch(text_arr, ngram: int, n_hash: int):
     return emit.astype(bool), mins
 
 
-def extract_batch(batch, want_spans: bool, want_md: bool):
-    """RecordBatch (doc_id, spans) → extraction-output RecordBatch via the
-    C kernel, or None to fall back to the Python path (no library, sliced
-    arrays, dictionary-encoded columns, zero rows, or OOM inside C)."""
-    lib = _lib()
-    if lib is None:
-        return None
-    import numpy as np
-    import pyarrow as pa
-
-    n_docs = batch.num_rows
-    if n_docs == 0:
-        return None
-    spans = batch.column("spans")
-    if isinstance(spans, pa.ChunkedArray):
-        spans = spans.combine_chunks()
-    if spans.offset != 0:
+def _c_span_fields(spans):
+    """The four span children when ``spans`` already has the layout the C
+    kernel reads (zero-offset ``list`` and children, children typed as in
+    ``SPAN_TYPE``), else None."""
+    if not pa.types.is_list(spans.type) or spans.offset != 0:
         return None
     vals = spans.values
     if vals.offset != 0:
         return None
     fields = [vals.field(n) for n in ("kind", "text", "media_ref", "offset")]
-    for a in fields[:3]:
-        if a.offset != 0 or a.type != pa.string():
-            return None
-    if fields[3].offset != 0 or fields[3].type != pa.int32():
+    if any(a.offset != 0 for a in fields):
         return None
+    if [a.type for a in fields] != [f.type for f in SPAN_TYPE]:
+        return None
+    return fields
+
+
+def extract_batch(batch, want_spans: bool, want_md: bool):
+    """RecordBatch (doc_id, spans) → extraction-output RecordBatch via the
+    C kernel, or None when the caller must fall back to ``core``: no native
+    library, C out of memory, or spans Arrow cannot cast to ``SPAN_TYPE``
+    (an int64 offset past int32, reordered struct fields that also need a
+    type change). Every other layout of the spans column is accepted:
+    sliced/offset arrays and ``large_string`` / dictionary / non-``int32``
+    children are first copied into the compacted layout Spark's batches
+    already arrive in."""
+    lib = _lib()
+    if lib is None:
+        return None
+    import numpy as np
+
+    n_docs = batch.num_rows
+    spans = batch.column("spans")
+    if isinstance(spans, pa.ChunkedArray):
+        spans = spans.combine_chunks()
+    fields = _c_span_fields(spans)
+    if fields is None:
+        try:
+            spans = pa.concat_arrays([spans.cast(pa.list_(SPAN_TYPE))])
+        except pa.ArrowException:
+            return None
+        fields = _c_span_fields(spans)
+        if fields is None:
+            return None
 
     U8 = ctypes.POINTER(ctypes.c_ubyte)
     I32 = ctypes.POINTER(ctypes.c_int)
@@ -1601,7 +1630,8 @@ def extract_batch(batch, want_spans: bool, want_md: bool):
         O = po.contents
         if O.oom or int(O.n_docs) != n_docs:
             return None
-        counts = np.ctypeslib.as_array(O.counts, shape=(n_docs,)).copy()
+        counts = (np.ctypeslib.as_array(O.counts, shape=(n_docs,)).copy()
+                  if n_docs else np.empty(0, np.int32))
         if want_spans:
             kinds = _str_array(O.rkind, pa, np)
             texts = _str_array(O.rtext, pa, np)

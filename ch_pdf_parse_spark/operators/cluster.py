@@ -249,6 +249,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution over the union of the three text
     detectors' candidate pairs (module docstring): (doc_id, cluster_id,
     is_keeper), keeper = min doc_id per connected component."""
+    from ..packaging import ensure_on_executors
+
+    ensure_on_executors(spark)
     corpus = with_dup_corpus(_t(spark, sf_dir, "documents"))
     nodes = corpus.select("doc_id").distinct()
     # r7 feed split (candidate_pairs_union docstring): persist ONE int64

@@ -74,10 +74,6 @@ _PARTIAL_SCHEMA = T.StructType([
 ])
 
 
-def _spans_to_tuples(spans) -> list[tuple[str, str, str, int]]:
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-
-
 def normalize_columns(columns) -> tuple[str, ...]:
     """Validate + canonicalize an output-column projection. One definition so
     job.py / run_with_lineage can fail fast BEFORE the staging copy (a typo'd
@@ -94,13 +90,43 @@ def normalize_columns(columns) -> tuple[str, ...]:
     return tuple(c for c in ("spans", "markdown") if c in cols)
 
 
+def _extract_core(batch, want_spans: bool, want_md: bool):
+    """Fallback for ``_extract_arrow`` when the C kernel declines the batch
+    (no compiler, ``CHPDF_NATIVE=0``, out of memory, or spans Arrow cannot
+    cast to ``native.SPAN_TYPE``): the golden oracle
+    ``core.extract_document`` per document, same output columns."""
+    import pyarrow as pa
+
+    from .native import SPAN_TYPE
+
+    # one to_pylist per child is ~3x faster than a dict per span; the
+    # struct's own nulls reach every child (a null span = all-None tuple)
+    spans = batch.column("spans")
+    vals = spans.flatten()
+    child = dict(zip([f.name for f in vals.type], vals.flatten()))
+    flat = list(zip(*(child[n].to_pylist()
+                      for n in ("kind", "text", "media_ref", "offset"))))
+    recs, mds, pos = [], [], 0
+    for n in spans.value_lengths().fill_null(0).to_pylist():
+        out, md = core.extract_document(flat[pos:pos + n])
+        pos += n
+        recs.append(out)
+        mds.append(md)
+    out_cols, out_names = [batch.column("doc_id")], ["doc_id"]
+    if want_spans:
+        out_cols.append(pa.array(recs, pa.list_(SPAN_TYPE)))
+        out_names.append("spans")
+    if want_md:
+        out_cols.append(pa.array(mds, pa.string()))
+        out_names.append("markdown")
+    return pa.RecordBatch.from_arrays(out_cols, names=out_names)
+
+
 def _extract_arrow(it, columns: tuple[str, ...] = ("spans", "markdown")):
-    """mapInArrow kernel: operate on the columnar batch directly — the nested
-    spans array is consumed as flat child arrays (no per-span dict or object
-    materialization, which costs more than the extraction itself). The
-    per-document semantics live in ``kernel.extract_document`` (optimized
-    twin of the golden oracle ``core.extract_document`` — differentially
-    tested in tests/test_kernel.py).
+    """mapInArrow kernel: the C whole-batch kernel over the Arrow buffers
+    (``native.extract_batch``), falling back to the golden oracle
+    ``core.extract_document`` when C declines the batch. Both forms
+    produce equal batches (tests/test_extract_native.py, test_property.py).
 
     ``columns`` is manual projection pushdown through the UDF barrier:
     Catalyst prunes columns up to the scan, but nothing inside a
@@ -108,91 +134,15 @@ def _extract_arrow(it, columns: tuple[str, ...] = ("spans", "markdown")):
     ``spans`` would still pay Arrow serialization for every markdown
     string (≈ the document's full text again) unless the kernel skips
     building the column entirely."""
-    import numpy as np
-    import pyarrow as pa
-
-    from . import kernel
     from . import native
 
-    def low_card_strs(arr):
-        # kind/media_ref are low-cardinality ("text", "", doc-local refs):
-        # decoding via dictionary indices reuses one Python str per distinct
-        # value instead of materializing one per span — ~8-15x faster than
-        # to_pylist on these columns (measured on the bench corpus).
-        enc = arr.fill_null("").dictionary_encode()
-        pool = np.array(enc.dictionary.to_pylist(), dtype=object)
-        return pool[enc.indices.to_numpy(zero_copy_only=False)].tolist()
-
-    use_native = native.available()
+    want_spans = "spans" in columns
+    want_md = "markdown" in columns
     for batch in it:
-        if use_native:
-            # whole-batch C kernel (classification + XY-cut + fold over the
-            # Arrow buffers directly — round 7; bit-identical, differential-
-            # pinned in tests/test_kernel.py); None → sliced/dictionary/
-            # empty/OOM edge, fall through to the Python twin
-            out = native.extract_batch(
-                batch, "spans" in columns, "markdown" in columns)
-            if out is not None:
-                yield out
-                continue
-        doc_ids = batch.column("doc_id")
-        spans = batch.column("spans")
-        if isinstance(spans, pa.ChunkedArray):  # normalize
-            spans = spans.combine_chunks()
-        lst = spans
-        offs = lst.offsets.to_numpy(zero_copy_only=False)
-        vals = lst.values
-        # `.values` ignores array slicing: on a sliced ListArray it returns the
-        # FULL child array, so converting it would do work proportional to the
-        # parent, not this batch (quadratic across batches). Spark's IPC
-        # batches arrive compacted, but trim anyway so any caller is safe.
-        if offs[0] > 0 or offs[-1] < len(vals):
-            vals = vals.slice(offs[0], offs[-1] - offs[0])
-            offs = offs - offs[0]
-        kinds = low_card_strs(vals.field("kind"))
-        texts = vals.field("text").to_pylist()
-        refs = low_card_strs(vals.field("media_ref"))
-        pages, y1s, x1s = kernel.decode_offsets(
-            vals.field("offset").fill_null(0)  # null geometry ≡ origin
-            .to_numpy(zero_copy_only=False))
-        want_spans = "spans" in columns
-        want_md = "markdown" in columns
-        # flat output columns + list offsets (built directly; no per-span dicts)
-        ok, ot, om = [], [], []
-        loffs = [0]
-        out_md = []
-        for i in range(len(batch)):
-            lo, hi = offs[i], offs[i + 1]  # absolute into the child arrays
-            recs, md = kernel.extract_document(
-                kinds, texts, refs, pages, y1s, x1s, lo, hi,
-                want_records=want_spans, want_markdown=want_md)
-            if want_spans:
-                for k, t, m in recs:
-                    ok.append(k)
-                    ot.append(t)
-                    om.append(m)
-                loffs.append(len(ok))
-            if want_md:
-                out_md.append(md)
-        out_cols = [doc_ids.combine_chunks()
-                    if isinstance(doc_ids, pa.ChunkedArray) else doc_ids]
-        out_names = ["doc_id"]
-        if want_spans:
-            # output span order == position within the doc's records list
-            orders = [o for i in range(len(batch))
-                      for o in range(loffs[i + 1] - loffs[i])]
-            struct = pa.StructArray.from_arrays(
-                [pa.array(ok, pa.string()), pa.array(ot, pa.string()),
-                 pa.array(om, pa.string()), pa.array(orders, pa.int32())],
-                names=["kind", "text", "media_ref", "offset"],
-            )
-            out_cols.append(
-                pa.ListArray.from_arrays(pa.array(loffs, pa.int32()), struct))
-            out_names.append("spans")
-        if want_md:
-            out_cols.append(pa.array(out_md, pa.string()))
-            out_names.append("markdown")
-        yield pa.RecordBatch.from_arrays(out_cols, names=out_names)
+        out = native.extract_batch(batch, want_spans, want_md)
+        if out is None:
+            out = _extract_core(batch, want_spans, want_md)
+        yield out
 
 
 # ---------------------------------------------------------------------------

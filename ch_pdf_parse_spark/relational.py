@@ -84,7 +84,7 @@ def _xy_cut_doc(tbl):
                 for j in idx
             ]
             # native (C) XY-cut when available — bit-identical
-            # (differential-fuzzed in tests/test_kernel.py); core.xy_cut
+            # (differential-fuzzed against core.xy_cut); core.xy_cut
             # remains the semantics and the live fallback
             ordered = None
             if use_native:

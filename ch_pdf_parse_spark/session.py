@@ -30,8 +30,8 @@ def get_spark(
 
     # JVM stability: this box's Xeon + OpenJDK 17 crashed the driver JVM with
     # SIGSEGV in StubRoutines::jlong_disjoint_arraycopy_avx3 under sustained
-    # 32-way Arrow/parquet load (hs_err_pid2594.log, round-6 driver bench at
-    # sf1.0 — 2 of 3 bench repeats + warmup died). That stub family is the
+    # 32-way Arrow/parquet load (round-6 driver bench at sf1.0 — 2 of 3
+    # bench repeats + warmup died). That stub family is the
     # AVX-512 arraycopy intrinsic; capping the JIT at AVX2 avoids it with
     # negligible cost for this workload (measured: within run-to-run noise).
     # Applies at JVM launch (client mode passes driver extraJavaOptions to the
@@ -76,8 +76,8 @@ def get_spark(
         # also fix it but costs 2.4x wall (measured 1024 vs 4096 at 32 cores);
         # size the heap, keep the reader batch at its default.
         #
-        # r7: 16g -> 48g. BOTH JVM SIGSEGVs on this box (hs_err_pid2594 /
-        # 20929) struck arraycopy stubs at ~85-95% heap occupancy under GC
+        # r7: 16g -> 48g. BOTH JVM SIGSEGVs on this box (rounds 6 and 7)
+        # struck arraycopy stubs at ~85-95% heap occupancy under GC
         # storms (740 GCs at 186 s; 20 FULL GCs at 112 s), with the faulting
         # address OUTSIDE the Java heap — an unmapped native/mmap region
         # touched mid-copy, the classic near-OOM off-heap use-after-free

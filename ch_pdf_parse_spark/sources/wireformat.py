@@ -65,6 +65,7 @@ Why this shape scales to 10^12 documents:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import struct
 import zlib
@@ -509,7 +510,15 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
     per shard: the same O(n_shards) driver bound every file listing of the
     directory already pays.
     """
+    from ..packaging import ensure_on_executors
+
+    ensure_on_executors(docs.sparkSession)
     os.makedirs(out_dir, exist_ok=True)
+    # drop the old statistics before any shard changes: a crash before the
+    # new sidecar is published then leaves none (full scan), never the old
+    # bounds over new shards of the same names (wrong pruning)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(out_dir, SPANSTATS_NAME))
     sharded = docs.select(
         "doc_id", "spans",
         (F.crc32(F.coalesce(F.col("doc_id"), F.lit("\x00null")).cast("binary"))
@@ -655,6 +664,9 @@ def read_wire(spark: SparkSession, path: str) -> DataFrame:
     identical rows by construction, full-scan fallback whenever the sidecar
     is absent or incomplete. Any transformation on the frame drops the hook
     (it is valid only for these exact parsed rows)."""
+    from ..packaging import ensure_on_executors
+
+    ensure_on_executors(spark)
     df = parse_wire_binary(_binary_scan(spark, path))
     df._chpdf_wire_over = (
         lambda min_spans: _wire_docs_over(spark, path, min_spans))
@@ -666,6 +678,9 @@ def wire_scan_stats(spark: SparkSession, path: str) -> DataFrame:
 
     The per-partition metrics row the north rule's lineage story wants for
     ingest: a nonzero ``n_corrupt`` names the exact shard to re-fetch."""
+    from ..packaging import ensure_on_executors
+
+    ensure_on_executors(spark)
     return _binary_scan(spark, path).mapInPandas(_stats_batches, STATS_SCHEMA)
 
 

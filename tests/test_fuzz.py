@@ -3,7 +3,8 @@ degenerate geometry, null offsets, media-heavy and caption-orphan layouts)
 through ALL THREE execution paths — flagship mapInArrow, forced page-salted,
 and relational — each compared against the golden oracle in one Spark job.
 
-Complements the hypothesis property tests (kernel vs oracle, pure Python):
+Complements the hypothesis property tests (mapInArrow kernel vs oracle, no
+Spark):
 this one exercises the Spark plumbing itself on inputs the fixture corpus
 never produces."""
 

@@ -60,8 +60,15 @@ def _check(rows, n=3, nh=16):
             assert list(mins[i]) == want, (i, t)
 
 
-def test_hostile_rows():
+def test_hostile_rows(monkeypatch):
     _check(HOSTILE)
+    # all-empty column at ngram=1: every row is one empty shingle. Hand C a
+    # NULL data buffer, as a producer that omits a zero-size buffer does —
+    # the empty copy must not read through it
+    addr = native._addr
+    monkeypatch.setattr(native, "_addr", lambda buf, typ: addr(
+        None if buf is not None and buf.size == 0 else buf, typ))
+    _check(["", "", None, ""], n=1)
 
 
 def test_fuzz_random_texts():

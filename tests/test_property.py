@@ -6,9 +6,11 @@ kinds (including unknown/None/empty), arbitrary short texts (including the
 classifier trigger prefixes), arbitrary packed geometry — and pin two
 engine-level properties:
 
-1. **Differential**: the optimized batch kernel (kernel.py, the flagship
-   mapInArrow path) agrees bit-for-bit with the readable golden oracle
-   (core.extract_document) on every input, not just corpus-shaped ones.
+1. **Differential**: the flagship mapInArrow kernel
+   (``pipeline._extract_arrow``: the C whole-batch kernel, or its ``core``
+   fallback without a compiler) agrees bit-for-bit with the readable golden
+   oracle (core.extract_document) on every input, not just corpus-shaped
+   ones.
 2. **Input-order invariance** (SURVEY §5.3): the output depends only on span
    geometry/kind, never on input order of the *text* spans — provided no two
    spans share an exact (page, y1, x1) (ties are broken by input index, the
@@ -22,7 +24,7 @@ engine-level properties:
 from hypothesis import given, settings, strategies as st
 
 from ch_pdf_parse_spark import constants as C
-from ch_pdf_parse_spark import core, kernel
+from ch_pdf_parse_spark import core, native, pipeline
 
 KINDS = list(C.TEXT_KINDS) + list(C.MEDIA_KINDS) + [C.UNLABELED, "", None,
                                                     "banana"]  # unknown kind
@@ -48,24 +50,21 @@ _spans = st.lists(
 
 
 def _run_kernel(spans):
-    kinds = [s[0] for s in spans]
-    texts = [s[1] for s in spans]
-    refs = [s[2] for s in spans]
-    # the mapInArrow wrapper fill_null(0)s offsets before the kernel sees them
-    pages, y1s, x1s = kernel.decode_offsets([s[3] or 0 for s in spans])
-    return kernel.extract_document(
-        kinds, texts, refs, pages, y1s, x1s, 0, len(spans))
+    import pyarrow as pa
 
-
-def _run_core(spans):
-    recs, md = core.extract_document(spans)
-    return [(k, t, m) for k, t, m, _ in recs], md
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["d"]),
+         pa.array([spans], pa.list_(native.SPAN_TYPE))],
+        ["doc_id", "spans"])
+    (out,) = pipeline._extract_arrow(iter([batch]))
+    (d,) = out.to_pylist()
+    return [tuple(r.values()) for r in d["spans"]], d["markdown"]
 
 
 @settings(max_examples=300, deadline=None)
 @given(_spans)
 def test_kernel_matches_oracle_on_arbitrary_input(spans):
-    assert _run_kernel(spans) == _run_core(spans)
+    assert _run_kernel(spans) == core.extract_document(spans)
 
 
 @settings(max_examples=200, deadline=None)

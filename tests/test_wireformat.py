@@ -240,3 +240,38 @@ def test_wire_sidecar_fallbacks(spark, docs_df, wire_dir, tmp_path):
     assert wf._wire_docs_over(spark, out, 1) is None
     assert _out_key(extract_documents(
         wf.read_wire(spark, out), salt_threshold=1).collect()) == want
+
+
+def test_crashed_rewrite_leaves_no_stale_sidecar(spark, tmp_path,
+                                                 monkeypatch):
+    """Rewriting a wire directory drops its old sidecar before the shard
+    job: a crash before the new sidecar is published must leave no
+    statistics (full scan), not the old bounds over the new shards — with
+    those, an oversized doc matched neither branch and vanished."""
+    from ch_pdf_parse_spark.pipeline import SPAN_STRUCT
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("doc_id", T.StringType()),
+                           T.StructField("spans", T.ArrayType(SPAN_STRUCT))])
+
+    def span(i):
+        return ("text", f"正文{i}", "", i * 100_000)
+
+    small = [(f"d{i}", [span(i)]) for i in range(6)]
+    rewritten = small[:-1] + [("big", [span(i) for i in range(5)])]
+    out = str(tmp_path / "wire")
+    # one shard: the rewrite replaces the same file name the sidecar covers
+    wf.write_wire_shards(spark.createDataFrame(small, schema), out,
+                         n_shards=1)
+    assert wf._read_spanstats(out) == {"shard-00000.cpw": 1}
+
+    def crash(out_dir, entries):
+        raise RuntimeError("driver died before publishing the sidecar")
+
+    monkeypatch.setattr(wf, "_write_spanstats", crash)
+    with pytest.raises(RuntimeError):
+        wf.write_wire_shards(spark.createDataFrame(rewritten, schema), out,
+                             n_shards=1)
+    got = extract_documents(wf.read_wire(spark, out), salt_threshold=2)
+    assert sorted(r["doc_id"] for r in got.collect()) == sorted(
+        d for d, _ in rewritten)

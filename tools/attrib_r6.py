@@ -22,8 +22,8 @@ Protocol (the one that caught the r3 flip):
   two settings are visible, not guessed.
 
 Note ``q_extract_relational_2k``'s entire code path (relational.py,
-pipeline.py, core.py, kernel.py, session.py, and its bench.py invocation)
-is byte-identical between fcae8e2 and HEAD (verified:
+pipeline.py, core.py, the former Python batch twin, session.py, and its
+bench.py invocation) is byte-identical between fcae8e2 and HEAD (verified:
 ``git diff fcae8e2..HEAD -- <those files>`` is empty for all but bench's
 unrelated additions) — for that target the A/B doubles as a pure
 window-noise measurement at two independent checkouts.
