@@ -24,6 +24,12 @@ Design for 10^12 documents:
   independent except for a single boundary bit (cross-page paragraph
   continuation, /root/reference/predict/pdf2markdown.py:571-577), which the
   stitch step resolves exactly.
+* Routing is decided once, when ``extract_documents`` is called: one
+  emptiness probe of the oversized branch, against the source as it is at
+  that moment, and the salted branch is planned only when a document routes
+  to it. The source must not change between that call and the action — the
+  same contract as the parquet file listing and the wire ``_SPANSTATS``
+  sidecar.
 
 Both paths reproduce the golden oracle (``core.extract_document``) bit-for-bit
 — asserted by tests/test_pipeline.py.
@@ -213,7 +219,20 @@ def extract_documents(
     barrier — a spans-only consumer (the driver's ``extract_spans``) skips
     Arrow-serializing every markdown string, a markdown-only consumer
     (``extract_markdown``) skips the span arrays. Catalyst cannot do this
-    pruning for a black-box mapInArrow."""
+    pruning for a black-box mapInArrow.
+
+    Routing is decided once, here, from the source as it is now: one
+    ``isEmpty`` probe of the oversized branch, and the salted branch and
+    its union are planned only when a document routes to it. The source
+    must not change between this call and the action that runs the result
+    (the same contract as the parquet file listing and the wire
+    ``_SPANSTATS`` sidecar). The probe reads only parquet footers when the
+    source stores ``n_spans`` (row-group statistics prune every row group),
+    the sidecar-pruned shards for ``read_wire``, and otherwise costs one
+    filtered pass over the source. Because the probe is an action, errors
+    in the source (a missing file, a failing upstream UDF) can surface at
+    call time rather than at the later action. A streaming source is never
+    probed (no action may run on it) and keeps both branches."""
     from functools import partial
 
     from .packaging import ensure_on_executors
@@ -244,19 +263,17 @@ def extract_documents(
     small = docs.where((n <= salt_threshold) | n.isNull())
     small_out = small.mapInArrow(partial(_extract_arrow, columns=cols), schema)
 
-    big = None
-    if wire_over is not None:
-        pruned = wire_over(salt_threshold)
-        if pruned is not None:
-            if getattr(pruned, "_chpdf_known_empty", False):
-                # the source proved NO record can route big: the salted
-                # branch contributes zero rows, so the union is the small
-                # branch — skip planning the empty explode/groupBy subtree
-                return small_out
-            big = (pruned.where(F.col("n_spans") > salt_threshold)
-                   .select("doc_id", "spans"))
-    if big is None:
+    pruned = wire_over(salt_threshold) if wire_over is not None else None
+    if pruned is not None:
+        big = (pruned.where(F.col("n_spans") > salt_threshold)
+               .select("doc_id", "spans"))
+    else:
         big = docs.where(n > salt_threshold)
+    # Spark cannot fold an empty salted branch away (PropagateEmptyRelation
+    # stops at FlatMapGroupsInPandas): left in the plan, it runs two
+    # shuffle-map stages on every action. A streaming plan admits no probe.
+    if not big.isStreaming and big.isEmpty():
+        return small_out
 
     off = F.coalesce(F.col("s.offset"), F.lit(0))  # null geometry ≡ origin
     exploded = (

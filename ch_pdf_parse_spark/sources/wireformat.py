@@ -483,14 +483,10 @@ def _wire_docs_over(spark: SparkSession, path: str,
         return None
     keep = [os.path.join(path, f) for f in present if stats[f] > min_spans]
     if not keep:
-        # no shard can hold a qualifying record: hand back a provably-empty
-        # frame (empty LocalRelation via limit(0)) and SAY so — the marker
-        # lets extract_documents drop its salted branch and the union
-        # altogether instead of planning empty exchanges under the
-        # FlatMapGroupsInPandas nodes PropagateEmptyRelation cannot fold
-        empty = spark.createDataFrame([], DOC_SCHEMA).limit(0)
-        empty._chpdf_known_empty = True
-        return empty
+        # no shard can hold a qualifying record: an empty LocalRelation (via
+        # limit(0)), so extract_documents' emptiness probe answers without
+        # starting a Spark job
+        return spark.createDataFrame([], DOC_SCHEMA).limit(0)
     binary = (spark.read.format("binaryFile")
               .option("pathGlobFilter", "*.cpw").load(keep)
               .select("path", "content"))
@@ -662,7 +658,9 @@ def read_wire(spark: SparkSession, path: str) -> DataFrame:
     predicate from the ``_SPANSTATS`` sidecar (``_wire_docs_over``),
     scanning only shards whose max ``n_spans`` exceeds the threshold —
     identical rows by construction, full-scan fallback whenever the sidecar
-    is absent or incomplete. Any transformation on the frame drops the hook
+    is absent or incomplete; when no shard can qualify the pruned frame is
+    an empty LocalRelation, which extract_documents' emptiness probe answers
+    without a Spark job. Any transformation on the frame drops the hook
     (it is valid only for these exact parsed rows)."""
     from ..packaging import ensure_on_executors
 

@@ -14,10 +14,12 @@ tests stay green — which is exactly why it gets its own tests.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from ch_pdf_parse_spark import constants as C
-from ch_pdf_parse_spark.pipeline import OUTPUT_SCHEMA, _extract_arrow
+from ch_pdf_parse_spark.pipeline import (OUTPUT_SCHEMA, _extract_arrow,
+                                         extract_documents)
 
 
 def _formatted(df) -> str:
@@ -32,6 +34,74 @@ def test_flagship_small_branch_has_no_shuffle(docs_df):
     plan = _formatted(small.mapInArrow(_extract_arrow, OUTPUT_SCHEMA))
     assert "MapInArrow" in plan
     assert not re.search(r"\bExchange\b", plan), plan
+
+
+def test_flagship_plans_no_salted_branch_without_oversized_docs(docs_df):
+    """No fixture doc is above the salt threshold, so extract_documents
+    plans the small branch alone: no shuffle, no pandas grouping, no
+    union."""
+    plan = _formatted(extract_documents(docs_df))
+    assert not re.search(r"\bExchange\b", plan), plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert not re.search(r"\bUnion\b", plan), plan
+
+
+@pytest.mark.parametrize("stored_n_spans", [False, True])
+def test_salted_branch_planned_for_oversized_doc_in_last_file(
+        spark, tmp_path, stored_n_spans):
+    """One document above the threshold, in the last of several parquet
+    files (the smallest, so Spark's largest-first packing puts it in the
+    last scan partition): the emptiness probe must find it there, plan the
+    salted branch, and every output row must equal the oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ch_pdf_parse_spark import core
+    from ch_pdf_parse_spark.native import SPAN_TYPE
+
+    thr, P = 3, core.pack_offset
+    docs = [(f"doc_{i}", [("text", f"正文{i}" * 40, "", P(0, 100 * j, 62))
+                          for j in range(thr)]) for i in range(5)]
+    docs.append(("doc_big", [("text", f"t{j}", "", P(j // 2, 100 * j, 62))
+                             for j in range(thr + 2)]))
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i, (doc_id, spans) in enumerate(docs):
+        cols = {"doc_id": pa.array([doc_id]),
+                "spans": pa.array([[dict(zip(("kind", "text", "media_ref",
+                                              "offset"), s)) for s in spans]],
+                                  pa.list_(SPAN_TYPE))}
+        if stored_n_spans:
+            cols["n_spans"] = pa.array([len(spans)], pa.int32())
+        pq.write_table(pa.table(cols), str(src / f"part-{i:05d}.parquet"))
+    df = spark.read.parquet(str(src))
+    part = {r["doc_id"]: r["p"] for r in df.select(
+        "doc_id", F.spark_partition_id().alias("p")).collect()}
+    assert part["doc_big"] == max(part.values()) > 0, part
+
+    out = extract_documents(df, salt_threshold=thr)
+    assert "FlatMapGroupsInPandas" in _formatted(out)
+    got = {r["doc_id"]: ([tuple(s) for s in r["spans"]], r["markdown"])
+           for r in out.collect()}
+    want = {}
+    for doc_id, spans in docs:
+        recs, md = core.extract_document(spans)
+        want[doc_id] = (list(recs), md)
+    assert got == want
+
+
+def test_streaming_source_keeps_both_branches(spark, docs_df, tmp_path):
+    """No action may run on a streaming plan, so extract_documents must not
+    probe a streaming source: it returns a streaming frame that still
+    carries the salted branch and the union."""
+    src = str(tmp_path / "src")
+    docs_df.select("doc_id", "spans").write.parquet(src)
+    stream = spark.readStream.schema(
+        docs_df.select("doc_id", "spans").schema).parquet(src)
+    out = extract_documents(stream)
+    assert out.isStreaming
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "FlatMapGroupsInPandas" in plan and "Union" in plan, plan
 
 
 def test_filter_and_pruning_reach_scan(docs_df):

@@ -333,7 +333,8 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
         "MapInArrow" in p and not re.search(r"\bExchange\b", p))
     # downstream extraction over parsed wire rows: the wire source must add
     # ZERO exchanges vs the parquet-fed flagship (parse kernel chains onto
-    # the scan; both extraction branches unchanged)
+    # the scan). No fixture doc routes to the salted branch, so neither plan
+    # carries it and both counts are 0
     p = formatted_plan(extract_documents(
         read_wire(spark, wire_tmp).select("doc_id", "spans")))
     plans["wire_ingest_extract"] = p
